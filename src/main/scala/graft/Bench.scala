@@ -103,7 +103,7 @@ object Bench {
     * clock-speed differences between machines cancel.
     */
   private def probeSecs(): Double = {
-    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val n = Runner.cpus.toInt
     val t0 = System.nanoTime()
     val threads = (0 until n).map { seed =>
       val t = new Thread(() => {
@@ -136,7 +136,7 @@ object Bench {
     // sentinel exists to measure the contention regime the queries
     // actually run under (a 32-wide spin under a 4-core session
     // would flag quota clipping the queries never feel)
-    val n = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val n = Runner.cpus.toInt
     val t0 = System.nanoTime()
     val threads = (0 until n).map { seed =>
       val t = new Thread(() => {
@@ -200,15 +200,12 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "graft-bench")
-    // warm-up: session, codegen, parquet reader, one shuffle
-    Tables.load(spark, sfDir, "events")
-      .groupBy("event_type").count().collect()
     // --only a,b,c: time a subset (fast per-query iteration)
     val only = args.sliding(2).collectFirst {
-      case Array("--only", names) => names.split(",").toSet
+      case Array("--only", names) => Runner.resolve(names.split(",").toSeq).toSet
     }.getOrElse(Set.empty[String])
+    val spark = Runner.session("graft-bench")
+    Runner.warmUp(spark, sfDir)
     val qs = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.isEmpty || only(n) }
     val times = scala.collection.mutable.LinkedHashMap(
@@ -232,16 +229,16 @@ object Bench {
       parSentinels += parSentinelSecs()
       qs.zipWithIndex.foreach { case ((name, fn), qi) =>
         if (qi % ProbeEvery == 0) probes += (offset() -> probeSecs())
-        CacheScope.releaseAll()
-        spark.catalog.clearCache()
-        repAt(name) = repAt(name) :+ offset()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
-          case e: Throwable =>
-            errors(name) = s"${e.getClass.getSimpleName}: " +
-              Option(e.getMessage).getOrElse("").take(200).replace('\n', ' ')
+        Runner.isolated(spark, name) {
+          repAt(name) = repAt(name) :+ offset()
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).count() } catch {
+            case e: Throwable =>
+              errors(name) = s"${e.getClass.getSimpleName}: " +
+                Option(e.getMessage).getOrElse("").take(200).replace('\n', ' ')
+          }
+          times(name) = times(name) :+ (System.nanoTime() - t0) / 1e9
         }
-        times(name) = times(name) :+ (System.nanoTime() - t0) / 1e9
       }
       probes += (offset() -> probeSecs()) // pass-end bracket
     }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -37,13 +37,4 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // replay/threshold filters on the events feed skip row groups
     ext.injectOptimizerRule(_ => graft.plans.DerivedTimeBound)
   }
-}
-
-/** Imperative twin for sessions that already exist (tests, REPLs). */
-object GraftFunctions {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_dot",
-      (children: Seq[Expression]) => LongDotProduct(children(0), children(1)),
-      "built-in")
 }

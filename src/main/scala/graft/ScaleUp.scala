@@ -40,8 +40,7 @@ object ScaleUp {
     val factor = if (args.length > 2) args(2).toInt else 10
     val plantSkew = if (args.length > 3) args(3).toInt else 0
     val plantHub = if (args.length > 4) args(4).toInt else 0
-    val spark = Sessions.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"), "graft-scaleup")
+    val spark = Runner.session("graft-scaleup")
     generate(spark, src, dst, factor, plantSkew, plantHub)
     spark.stop()
   }

@@ -2,18 +2,18 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one SparkSession recipe shared by every driver-contract main
-  * (Verify, Bench, ExplainAudit): local[cpus], matching shuffle
-  * width, UTC, GraftExtensions, Tables.sessionConf reader flags. A
-  * single definition — Bench must time exactly the session Verify
-  * validates.
+/** The one SparkSession recipe shared by every main (Bench, Verify,
+  * Audit and ScaleUp, through [[Runner.session]]): local[cpus],
+  * matching shuffle width, UTC, GraftExtensions, Tables.sessionConf
+  * reader flags. A single definition — Bench must time exactly the
+  * session Verify validates.
   */
 object Sessions {
   /** `SPARK_GRAFT_STATESTORE=rocksdb` swaps the streaming state-store
     * provider for the whole session — the deployment-representative
     * twin (SURVEY §4: state that outgrows executor heaps lives in
     * RocksDB). An env switch here rather than a per-main flag so
-    * Verify, Bench, and the A/B tools all price/validate the SAME
+    * Verify, Bench, and Audit all price/validate the SAME
     * session recipe under either provider; Bench suffixes its
     * artifact (`BENCH_LOCAL_rocksdb.json`) so a RocksDB pricing run
     * can never clobber the HDFS-provider canonical.

@@ -80,6 +80,17 @@ object SparkEntry {
     */
   private val DemoCap = 3
 
+  /** The queries whose build DRAINS a streaming query through the
+    * engine and returns a local relation: their real physical plans
+    * live inside the streaming engine, not in the returned frame's
+    * plan, and their cost is per-micro-batch barriers.
+    */
+  val streamingDrains: Set[String] = Set(
+    "cdc_stream_windowed", "cdc_stream_scd2", "cdc_stream_handoff",
+    "cdc_stream_roundtrip", "cdc_stream_dedup", "cdc_stream_frontier",
+    "events_stream_attribution", "events_stream_attribution_outer",
+    "events_stream_quiet", "events_stream_sessions")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_pricing_summary"   -> ((s, dir) => Analytics.q1PricingSummary(s, dir)),
     "q3_shipping_priority" -> ((s, dir) => Analytics.q3ShippingPriority(s, dir)),

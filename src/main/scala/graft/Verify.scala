@@ -10,36 +10,32 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args.take(2)
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val spark = Sessions.build(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), "graft-verify")
+    val names = Runner.resolve(args.drop(2).headOption.toSeq.flatMap(_.split(",")))
+    val spark = Runner.session("graft-verify")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // an analysis-time failure never reaches overwrite's
-        // delete-and-commit, so a REUSED outDir would still hold the
-        // previous run's parquet and the compare would silently pass
-        // on stale output — delete it so the failure is a visible
-        // missing-output FAIL, not a phantom pass
-        val dir = new java.io.File(s"$outDir/$name")
-        if (dir.exists()) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete(); ()
+    names.foreach { name =>
+      Runner.isolated(spark, name) {
+        try SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          // an analysis-time failure never reaches overwrite's
+          // delete-and-commit, so a REUSED outDir would still hold the
+          // previous run's parquet and the compare would silently pass
+          // on stale output — delete it so the failure is a visible
+          // missing-output FAIL, not a phantom pass
+          val dir = new java.io.File(s"$outDir/$name")
+          if (dir.exists()) {
+            def rm(f: java.io.File): Unit = {
+              Option(f.listFiles()).foreach(_.foreach(rm))
+              f.delete(); ()
+            }
+            rm(dir)
           }
-          rm(dir)
         }
       }
-      // release per-query cached intermediates: keeps a 110-query
-      // session's memory bounded and queries independent
-      CacheScope.releaseAll()
     }
+    CacheScope.releaseAll()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -53,7 +49,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
+      .filter { case (k, _) => names.contains(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

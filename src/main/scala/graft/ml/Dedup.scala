@@ -275,7 +275,7 @@ object Dedup {
     * plan BUILDER that runs one Spark job (the pre-census) at
     * construction time, and the plan it returns is therefore
     * data-dependent at build time — a plan-only flow (`df.explain`,
-    * ExplainAudit) executes the census even if the returned frame is
+    * `Audit explain`) executes the census even if the returned frame is
     * never acted on, and the benign/hot decision is FROZEN into the
     * returned plan. Both properties are the point: the decision must
     * precede planning to delete the window + two exchanges, and the

@@ -1500,7 +1500,7 @@ object Similarity {
     // MEASURED WORSE and reverted: the scoring pass was never
     // actually waiting on the walk — AQE materializes the final
     // action's independent stages concurrently — so the extra
-    // barrier only added jobs (JobAudit 153 → 176; the r15 kcore
+    // barrier only added jobs (`Audit jobs` 153 → 176; the r15 kcore
     // lesson again: a cache handoff on the critical path loses to
     // recompute-inside-one-job whose stages run in parallel).
     val phase2 = Par.run[Any](Seq(

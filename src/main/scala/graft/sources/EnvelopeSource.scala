@@ -18,11 +18,17 @@ import graft.cdc.Envelope
   */
 object EnvelopeSource {
 
+  /** Data column first, partition column last — the order partition
+    * discovery appends in. A stream started on a still-empty sink
+    * discovers no partition column; were `partition_key` declared
+    * first, such a stream would return the two values swapped (the
+    * JSON in `partition_key`, the shard name in `message`).
+    */
   private val fileSchema = StructType(Seq(
-    StructField("partition_key", StringType),
-    StructField("message", StringType)))
+    StructField("message", StringType),
+    StructField("partition_key", StringType)))
 
-  /** Batch-read the sink directory into (partition_key, message).
+  /** Batch-read the sink directory into (message, partition_key).
     * Reads the sink ROOT, not a wildcard glob: the streaming sink's
     * exactly-once guarantee lives in its `_spark_metadata` commit
     * log, and a root read uses it (MetadataLogFileIndex) so

@@ -271,11 +271,7 @@ object CdcPipeline {
     // see withStateParts)
     withStateParts(spark, 8) {
     import spark.implicits._
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = graft.Tables.withEventTime(
-      spark.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    val raw = eventsStream(spark, dir)
     val sharded = ChangeFeed.withShard(ChangeFeed.annotate(raw), 8)
       .filter(col("ts").isNotNull)
       .select(col("shard"), col("ts"), col("event_id"))
@@ -306,11 +302,7 @@ object CdcPipeline {
     // history, so the width trades batch parallelism against the
     // per-batch store-commit barrier (r14 width sweep)
     withStateParts(spark, statePartsFor(dir, 8)) {
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = graft.Tables.withEventTime(
-      spark.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    val raw = eventsStream(spark, dir)
     val versions = scd2Stream(annotate(raw.filter(col("ts").isNotNull)))
     drainFilesSummarized(spark, versions)(
       _.orderBy(col("user_id"), col("version")))
@@ -674,11 +666,7 @@ object CdcPipeline {
         .write.parquet(s"$stateDir/v=0")
       // the CDC task: resume from the window start, stream through
       // the standard upsert against the pre-seeded state
-      val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-      val raw = graft.Tables.withEventTime(
-        spark.readStream.schema(rawSchema)
-          .option("pathGlobFilter", "events.parquet")
-          .parquet(dir))
+      val raw = eventsStream(spark, dir)
       val changes = annotate(raw.filter(col("ts").isNotNull))
         .filter(col("ts") > start)
       val q = foreachBatchUpsert(changes, stateDir, ckpt).start()
@@ -997,17 +985,7 @@ object CdcPipeline {
   def fileRoundtrip(spark: SparkSession, dir: String, tmpRoot: String): DataFrame = {
     val sink = s"$tmpRoot/sink"
     val ckpt = s"$tmpRoot/ckpt"
-    // same ts normalization as Tables.loadEvents (schema-dispatched:
-    // raw-nanos long on legacy readers, timestamp_ntz on Spark 4.1+),
-    // on a file STREAM source (schema comes from the batch footer
-    // read). The testdata ships one parquet FILE per table and the
-    // streaming file source lists a DIRECTORY — so stream the SF dir
-    // with a glob pinned to the events file.
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = graft.Tables.withEventTime(
-      spark.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    val raw = eventsStream(spark, dir)
       .filter(col("user_id") % 4 === 0)
     val q = kinesisLikeSink(envelopeStream(annotate(raw)), sink, ckpt).start()
     try { q.processAllAvailable() } finally { q.stop() }
@@ -1052,11 +1030,7 @@ object CdcPipeline {
     // the store-commit overhead at 32 dominated the extra scan
     // parallelism (r14 width sweep)
     withStateParts(spark, statePartsFor(dir, 8)) {
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    def src = graft.Tables.withEventTime(
-      spark.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    def src = eventsStream(spark, dir)
     val planted = src.unionByName(src.filter(col("event_id") % 7 === 0))
     val deduped = ChangeFeed.annotate(planted)
       .withWatermark("ts", "35 days")
@@ -1088,11 +1062,7 @@ object CdcPipeline {
     // (window, op) groups — partitions beyond single digits only add
     // empty store commits (r14 width sweep)
     withStateParts(spark, 4) {
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = graft.Tables.withEventTime(
-      spark.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
+    val raw = eventsStream(spark, dir)
     val agg = windowedStatsStream(annotate(raw))
     drainToLocal(spark, agg, OutputMode.Complete)(
       _.orderBy(col("window_start"), col("op")))
@@ -1137,11 +1107,7 @@ object CdcPipeline {
     val delay = "1 hour"
     val stage = stageWithSentinel(spark, dir, marginSeconds = 3 * 3600L)
     try {
-      val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-      val raw = graft.Tables.withEventTime(
-        spark.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString))
+      val raw = stagedEventsStream(spark, dir, stage)
       val sessions = sessionizeStream(
         annotate(raw.filter(col("ts").isNotNull)), gap, delay)
       drainFilesSummarized(spark, sessions)(
@@ -1187,11 +1153,7 @@ object CdcPipeline {
     withStateParts(spark, statePartsFor(dir, 4)) {
     val stage = stageWithSentinel(spark, dir, marginSeconds = 9 * 24 * 3600L)
     try {
-      val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-      def src(): DataFrame = graft.Tables.withEventTime(
-        spark.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString))
+      def src(): DataFrame = stagedEventsStream(spark, dir, stage)
         .filter(col("ts").isNotNull)
       val touches = src().filter(col("event_type") =!= "purchase")
         .select(col("user_id"), col("event_id").as("touch_id"),
@@ -1255,11 +1217,7 @@ object CdcPipeline {
     val stage = stageWithSentinel(spark, dir, marginSeconds = 9 * 24 * 3600L,
       sentinelTypes = Seq("sentinel", "purchase"))
     try {
-      val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-      def src(): DataFrame = graft.Tables.withEventTime(
-        spark.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString))
+      def src(): DataFrame = stagedEventsStream(spark, dir, stage)
         .filter(col("ts").isNotNull)
       val touches = src().filter(col("event_type") =!= "purchase")
         .select(col("user_id").as("t_user"), col("event_id").as("touch_id"),
@@ -1324,11 +1282,7 @@ object CdcPipeline {
     val quietMicros = quietMinutes * 60L * 1000000L
     val stage = stageWithSentinel(spark, dir, marginSeconds = 3 * 3600L)
     try {
-      val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-      val raw = graft.Tables.withEventTime(
-        spark.readStream.schema(rawSchema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(stage.toString))
+      val raw = stagedEventsStream(spark, dir, stage)
         .filter(col("ts").isNotNull)
         .withWatermark("ts", delay)
       val verdicts = raw.select(col("user_id"), col("ts"))
@@ -1368,6 +1322,28 @@ object CdcPipeline {
       Iterator.empty
     }
   }
+
+  /** `dir`'s events feed as a file STREAM source, with the same ts
+    * normalization as Tables.loadEvents (schema-dispatched: raw-nanos
+    * long on legacy readers, timestamp_ntz on Spark 4.1+); the schema
+    * comes from the batch footer read. The testdata ships one parquet
+    * FILE per table and the streaming file source lists a DIRECTORY —
+    * so the SF dir is streamed with a glob pinned to the events file.
+    */
+  private def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.withEventTime(
+      spark.readStream.schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(dir))
+
+  /** The [[stageWithSentinel]] copy of `dir`'s events feed as a file
+    * stream, one staged file per micro-batch (feed, then sentinel). */
+  private def stagedEventsStream(
+      spark: SparkSession, dir: String, stage: java.nio.file.Path): DataFrame =
+    graft.Tables.withEventTime(
+      spark.readStream.schema(spark.read.parquet(s"$dir/events.parquet").schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage.toString))
 
   /** Reserved key for the watermark-advancing sentinel row. */
   val SentinelUser = -1L

@@ -1,17 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class ExtensionsSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  test("long_dot is callable from SQL after imperative registration") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT long_dot(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d").first()
-    assert(r.getLong(0) == 32L)
-  }
 
   test("GraftExtensions injections register long_dot into a live session") {
     // spark.sql.extensions is a STATIC conf (read from the

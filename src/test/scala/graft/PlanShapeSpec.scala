@@ -44,25 +44,7 @@ import graft.ml.{Dedup, Similarity}
   */
 class PlanShapeSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  /** Every physical node, descending through AQE wrappers (the
-    * initial, statically-planned tree) and cached-relation boundaries
-    * (a persisted intermediate otherwise truncates the visible tree
-    * at InMemoryTableScan — the capped generators all materialize
-    * their signature relations, so the cap window lives BELOW one). */
-  private def nodes(p: SparkPlan): Seq[SparkPlan] =
-    p.collect {
-      case a: AdaptiveSparkPlanExec => a +: nodes(a.executedPlan)
-      // AQE query stages (shuffle/broadcast/result/table-cache) have
-      // no children — their subtree hangs off .plan
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        q +: nodes(q.plan)
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        s +: nodes(s.relation.cachedPlan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec =>
-        r +: nodes(r.child)
-      case n => Seq(n)
-    }.flatten
+  import Audit.nodes
 
   /** [[nodes]] plus every subquery plan hanging off any node's
     * expressions (a cartesian hiding inside a scalar subquery must
@@ -80,14 +62,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   private def planOf(df: DataFrame): SparkPlan =
     df.queryExecution.executedPlan
-
-  /** Queries whose build DRAINS a streaming query and returns a local
-    * relation — nothing of their real plan is visible statically. */
-  private val streamingDrains = Set(
-    "cdc_stream_windowed", "cdc_stream_scd2", "cdc_stream_handoff",
-    "cdc_stream_roundtrip", "cdc_stream_dedup", "cdc_stream_frontier",
-    "events_stream_attribution", "events_stream_attribution_outer",
-    "events_stream_quiet", "events_stream_sessions")
 
   test("benign-data cap skip: no cap window, input passes through") {
     val docs = Tables.load(spark, sf, "documents")
@@ -228,7 +202,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val bnlj = scala.collection.mutable.Set.empty[String]
     val gwin = scala.collection.mutable.Set.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (!streamingDrains(name)) {
+      if (!SparkEntry.streamingDrains(name)) {
         val all = nodesWithSubqueries(planOf(fn(spark, sf)))
         assert(!all.exists(_.isInstanceOf[CartesianProductExec]),
           s"$name plans a CartesianProduct")

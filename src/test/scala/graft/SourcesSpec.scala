@@ -108,4 +108,33 @@ class SourcesSpec extends AnyFunSuite {
     try q.awaitTermination(60000) finally q.stop()
     assert(spark.table("consumed").count() == events.length)
   }
+
+  test("streaming consumer started before the first sink commit reads every payload") {
+    // the Kinesis-consumer ordering: the consumer is already tailing
+    // an EMPTY sink when the producer commits its first batch
+    implicit val sq = spark.sqlContext
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-src").toString
+    val consumer = EnvelopeSource.changeFeedStream(spark, s"$dir/data", dataSchema)
+      .writeStream.format("memory").queryName("consumed_first")
+      .outputMode("append").start()
+    val mem = MemoryStream[RawEvent]
+    val producer = CdcPipeline.kinesisLikeSink(
+      CdcPipeline.envelopeStream(CdcPipeline.annotate(mem.toDF())),
+      s"$dir/data", s"$dir/ckpt").start()
+    try {
+      mem.addData(events)
+      producer.processAllAvailable()
+      consumer.processAllAvailable()
+    } finally { producer.stop(); consumer.stop() }
+    val rows = spark.table("consumed_first").collect()
+    assert(rows.length == events.length)
+    rows.foreach { r =>
+      assert(!r.isNullAt(r.fieldIndex("data")) && !r.isNullAt(r.fieldIndex("event_ts")),
+        s"delivered row without a payload: $r")
+      assert(r.getAs[String]("partition_key") ==
+        s"${r.getAs[String]("schema_name")}.${r.getAs[String]("table_name")}",
+        s"partition_key is not the row's schema.table: $r")
+    }
+  }
 }

@@ -15,7 +15,7 @@ artifact. Resolution order:
 
   1. explicit names_file argument;
   2. tools/qnames/<qsha>.txt keyed by the artifact's qsha;
-  3. the live registry via graft.Names (needs the benched checkout).
+  3. the live registry via `graft.Audit names` (needs the benched checkout).
 
 Whatever the source, the digest is re-verified against qsha before
 any name is paired with a number.
@@ -41,9 +41,9 @@ def names(names_file, qsha):
         else:
             out = subprocess.run(
                 ["bash", os.path.join(REPO, "tools", "run_main.sh"),
-                 "graft.Names"],
+                 "graft.Audit", "names"],
                 capture_output=True, text=True, check=True)
-            lines, src = out.stdout.splitlines(), "graft.Names (live registry)"
+            lines, src = out.stdout.splitlines(), "graft.Audit names (live registry)"
     return [ln.split("\t")[0] for ln in lines if ln.strip()], src
 
 

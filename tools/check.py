@@ -29,8 +29,12 @@ con = duckdb.connect()
 # taking the whole replay down: without a memory limit the OS
 # OOM-killer terminates the process silently (no summary, no
 # per-query verdicts), and without a temp cap a runaway spill fills
-# the disk. Both limits surface as catchable per-query errors.
-con.sql("PRAGMA memory_limit='24GB'")
+# the disk. Both limits surface as catchable per-query errors. The
+# memory limit is half the host's MemTotal (at least 1 GiB), so it
+# can bind before the OOM-killer does on any host.
+with open("/proc/meminfo") as f:
+    mem_kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+con.sql(f"PRAGMA memory_limit='{max(1, mem_kib // 2097152)}GiB'")
 con.sql("PRAGMA temp_directory='/tmp/duckdb_spill'")
 con.sql("PRAGMA max_temp_directory_size='40GB'")
 for t in TABLES:

@@ -8,8 +8,8 @@ first cell is a named plan family, e.g. "bucketed fact joins",
 explicitly mapped here to the registry names it covers).
 
 Usage: python3 tools/explain_check.py [names_file]
-  names_file: output of `tools/run_main.sh graft.Names` (name\tkind
-  per line). If omitted, the script runs graft.Names itself (needs
+  names_file: output of `tools/run_main.sh graft.Audit names`
+  (name\tkind per line). If omitted, the script runs it itself (needs
   compiled classes in target/).
 
 Exit 0 iff all registry names resolve; otherwise prints the
@@ -39,7 +39,7 @@ def registry_names(names_file):
     else:
         out = subprocess.run(
             ["bash", os.path.join(REPO, "tools", "run_main.sh"),
-             "graft.Names"],
+             "graft.Audit", "names"],
             capture_output=True, text=True, check=True)
         lines = out.stdout.splitlines()
     names = []

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Diff two ExplainAudit dumps by per-query join-strategy signature.
+"""Diff two `graft.Audit explain` dumps by per-query join-strategy signature.
 
 Usage: python3 tools/plan_diff.py explain_A.txt explain_B.txt
 

@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a graft main class with the Spark jars + compiled classes,
-# mirroring build.sbt's forked javaOptions (add-opens, UTC, 16g G1).
+# mirroring build.sbt's forked javaOptions (add-opens, UTC, G1, and a
+# heap of SPARK_DRIVER_MEM, else half of MemTotal clamped to 2-8 GiB).
 MAIN="$1"; shift
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
 CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -19,5 +21,5 @@ exec java \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-16g} -XX:+UseG1GC -XX:MaxGCPauseMillis=50 \
+  -Xmx"$MEM" -XX:+UseG1GC -XX:MaxGCPauseMillis=50 \
   -cp "$CP" "$MAIN" "$@"

@@ -3,7 +3,7 @@
 36/36 replay).
 
 What it does, end to end:
- 1. dumps full-registry `graft.ExplainAudit` plans at sf0.1 and sf1,
+ 1. dumps full-registry `graft.Audit explain` plans at sf0.1 and sf1,
  2. diffs per-query join signatures (tools/plan_diff.py's extractor),
  3. compares the drift set against tools/sf1_verified.json — the
     queries whose sf1 (demoted) physical plans have already been
@@ -19,7 +19,7 @@ check (external oracle, exact rows/schema/values), so it is tried
 first with a per-query timeout; queries whose oracle IS the quadratic
 pair recompute (the SRP/minhash families — dedup_embedding's sf1
 oracle measured >25 min) blow the timeout and fall back to
-graft.StrategyAB: same engine, same query, natural (demoted) vs
+`graft.Audit strategy-ab`: same engine, same query, natural (demoted) vs
 broadcast-forced plan, exact order-insensitive fingerprint
 (count + sum(xxhash64) as decimal(38,0)), join signatures printed so
 a vacuous A/B is visible.
@@ -28,7 +28,7 @@ Usage:
   python3 tools/sf1_gate.py                 # gate only (dumps + diff + compare)
   python3 tools/sf1_gate.py --replay        # gate + verify NEW drift queries
   python3 tools/sf1_gate.py --replay all    # gate + re-verify the whole drift set
-  python3 tools/sf1_gate.py --dumps A B     # reuse existing ExplainAudit dumps
+  python3 tools/sf1_gate.py --dumps A B     # reuse existing `Audit explain` dumps
 
 Requires /tmp/sf1 (regenerate: bash tools/run_main.sh graft.ScaleUp
 /root/testdata/sf0.1 /tmp/sf1 10) and compiled classes
@@ -55,12 +55,12 @@ def sh(args, timeout=None, **kw):
 
 
 def dump_plans(sfdir, out):
-    print(f"[sf1_gate] ExplainAudit {sfdir} -> {out}", flush=True)
+    print(f"[sf1_gate] Audit explain {sfdir} -> {out}", flush=True)
     with open(out, "w") as f:
-        r = sh(["bash", RUN, "graft.ExplainAudit", sfdir],
+        r = sh(["bash", RUN, "graft.Audit", "explain", sfdir],
                stdout=f, stderr=subprocess.DEVNULL)
     if r.returncode != 0:
-        sys.exit(f"[sf1_gate] ExplainAudit failed for {sfdir}")
+        sys.exit(f"[sf1_gate] Audit explain failed for {sfdir}")
     return out
 
 
@@ -95,18 +95,18 @@ def replay_duckdb(names):
             (passed if c.returncode == 0 else failed).append(n)
         except subprocess.TimeoutExpired:
             print(f"[sf1_gate] {n}: DuckDB route exceeded {DUCKDB_TIMEOUT}s "
-                  "(the oracle is the quadratic) — rerouting to StrategyAB",
+                  "(the oracle is the quadratic) — rerouting to strategy-ab",
                   flush=True)
             timed.append(n)
     return passed, failed, timed
 
 
 def replay_ab(names):
-    """graft.StrategyAB natural-vs-broadcast-forced exact fingerprint.
+    """`graft.Audit strategy-ab`: natural-vs-broadcast-forced exact fingerprint.
     Returns (passed, failed)."""
     if not names:
         return [], []
-    r = sh(["bash", RUN, "graft.StrategyAB", SF1, ",".join(names)],
+    r = sh(["bash", RUN, "graft.Audit", "strategy-ab", SF1, *names],
            capture_output=True, text=True)
     print(r.stdout, end="", flush=True)
     passed = [ln.split()[1] for ln in r.stdout.splitlines()
@@ -198,7 +198,7 @@ def main():
             print(f"[sf1_gate] FAIL {n}: sf1 replay mismatched")
         sys.exit(1)
     print(f"[sf1_gate] PASS — {len(passed_d)} via DuckDB, "
-          f"{len(passed_a)} via StrategyAB; verified set updated")
+          f"{len(passed_a)} via strategy-ab; verified set updated")
 
 
 if __name__ == "__main__":
